@@ -22,7 +22,8 @@ object SparkEntry {
   private val oracleSf = "/root/testdata/sf0.01"
 
   /** Memory-sink names must be unique per streaming run within a JVM
-    * (Verify and Bench both call q_stream_neardup in one session).
+    * (Verify and the perfbench sweep both call q_stream_neardup in one
+    * session).
     */
   private val streamRunCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 

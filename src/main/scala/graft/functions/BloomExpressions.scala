@@ -94,6 +94,7 @@ object BloomStatics {
 
 /** Mutable aggregation state: the bit array itself. */
 final class BloomBuffer(val mBits: Long, val k: Int) {
+  Bloom.requireAddressable(mBits)
   val words = new Array[Long](((mBits + 63L) >>> 6).toInt)
   def add(s: UTF8String): Unit = BloomStatics.set(words, mBits, k, s)
   def orWith(o: BloomBuffer): Unit = {
@@ -112,6 +113,7 @@ case class BloomAggregate(child: Expression, mBits: Long, k: Int,
     extends TypedImperativeAggregate[BloomBuffer]
     with ImplicitCastInputTypes with UnaryLike[Expression] {
   require(mBits >= 64, "bloom_agg needs mBits >= 64")
+  Bloom.requireAddressable(mBits)
   require(k >= 1 && k <= 32, "bloom_agg needs 1 <= k <= 32")
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
@@ -176,6 +178,16 @@ case class BloomProbeExpr(child: Expression,
 }
 
 object Bloom {
+  /** Largest filter whose words fit one JVM array: Int.MaxValue longs. */
+  val MaxBits: Long = Int.MaxValue.toLong << 6
+
+  /** Reject a filter too large to address instead of letting the word
+    * count overflow `.toInt` into a tiny or negative array size.
+    */
+  def requireAddressable(mBits: Long): Unit =
+    require(mBits <= MaxBits,
+      s"bloom filter of $mBits bits exceeds the addressable maximum of $MaxBits bits")
+
   /** Column API: aggregate a string column into bloom-filter bytes. */
   def bloomAgg(c: Column, mBits: Long, k: Int): Column =
     ColumnBridge.column(BloomAggregate(

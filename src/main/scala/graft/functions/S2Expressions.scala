@@ -337,7 +337,7 @@ case class TileYExpr(left: Expression, right: Expression)
   * the same substring).
   */
 object GeoParse {
-  // Design notes, both measured (tools/GeoParseBench):
+  // Design notes, both measured (BENCH_local.md:103,147):
   //  - Decode-then-String-ops is deliberate: an in-place UTF8String byte
   //    scan (indexOf/substring) measured 5x SLOWER because
   //    UTF8String.indexOf walks chars via numBytesForFirstByte while

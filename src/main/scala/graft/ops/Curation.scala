@@ -139,6 +139,11 @@ object Curation {
     * costs the window only as many rows as it has distinct scores. The
     * tiny label table joins back broadcast.
     *
+    * NULLs: a row with a NULL score or a NULL stratum is kept with
+    * `bucket = NULL` (the label table joins back as a left join). Such
+    * rows take no part in the quantiles: n and count_le count only rows
+    * whose stratum and score are both non-NULL.
+    *
     * cuts: highest first, e.g. Seq("head" -> 90, "middle" -> 50);
     * everything below the last cut falls into `restBucket`.
     */
@@ -147,7 +152,8 @@ object Curation {
                       restBucket: String = "tail"): DataFrame = {
     require(cuts.nonEmpty && cuts.map(_._2) == cuts.map(_._2).sorted.reverse,
       "cuts must be highest-percentile first")
-    val hist = df.groupBy(col(stratum), col(scoreCol).cast("long").as("_score"))
+    val hist = df.filter(col(stratum).isNotNull && col(scoreCol).isNotNull)
+      .groupBy(col(stratum), col(scoreCol).cast("long").as("_score"))
       .agg(count(lit(1)).as("_cnt"))
     val w = Window.partitionBy(stratum).orderBy(col("_score"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -161,7 +167,7 @@ object Curation {
         })
       .select(col(stratum), col("_score"), col("bucket"))
     df.withColumn("_score", col(scoreCol).cast("long"))
-      .join(broadcast(labeled), Seq(stratum, "_score"))
+      .join(broadcast(labeled), Seq(stratum, "_score"), "left")
       .drop("_score")
   }
 }

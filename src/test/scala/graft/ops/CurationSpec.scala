@@ -244,6 +244,20 @@ class CurationSpec extends AnyFunSuite {
     assert(got == Map(1L -> "tail", 2L -> "middle", 3L -> "head"))
   }
 
+  test("quantileBuckets: a NULL score keeps its row with a NULL bucket " +
+    "and takes no part in the quantiles") {
+    import spark.implicits._
+    // Scored docs 1 and 2: n=2, count_le = 1, 2. Doc 1: 100 > 50*2 is
+    // false -> tail; doc 2: 200 > 90*2 -> head. Doc 3 has no score.
+    val docs = Seq((1L, "en", Some(1L)), (2L, "en", Some(2L)), (3L, "en", None))
+      .toDF("doc_id", "lang", "score")
+    val rows = Curation.quantileBuckets(docs, "lang", "score")
+      .select("doc_id", "bucket").collect()
+    assert(rows.length == 3)
+    assert(rows.map(r => r.getLong(0) -> Option(r.getString(1))).toMap ==
+      Map(1L -> Some("tail"), 2L -> Some("head"), 3L -> None))
+  }
+
   test("quantileBuckets: per-stratum independence and parallelism invariance") {
     import spark.implicits._
     val rng = new scala.util.Random(17)

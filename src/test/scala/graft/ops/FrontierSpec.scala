@@ -57,6 +57,15 @@ class FrontierSpec extends AnyFunSuite {
     assert(build(1) == build(9))
   }
 
+  test("a filter too large to address fails fast instead of overflowing") {
+    val e = intercept[IllegalArgumentException](new graft.functions.BloomBuffer(1L << 40, 7))
+    assert(e.getMessage.contains("addressable maximum"), e.getMessage)
+    val url = org.apache.spark.sql.catalyst.expressions.Literal("x")
+    intercept[IllegalArgumentException](graft.functions.BloomAggregate(url, 1L << 40, 7))
+    // the largest addressable size is accepted (nothing allocated here)
+    graft.functions.BloomAggregate(url, Bloom.MaxBits, 7)
+  }
+
   test("empty seen set: all-zero filter, every candidate definitely new") {
     import spark.implicits._
     val seen = Seq.empty[String].toDF("url")

@@ -4,6 +4,11 @@ from <outdir>/oracle_sql.json in DuckDB and compare against the Spark
 result parquet at <outdir>/<name>/ (rows, schema by sorted column names,
 and a hash of the sorted value matrix).
 
+    python3 tools/compare_oracle.py <outdir> [--sf=<scale>] [query ...]
+
+<outdir> is a `runMain graft.Verify <sfDir> <outdir> [query ...]` dump;
+naming queries (to Verify, then here) replays a single-query gate.
+
 The oracle SQL bakes the driver gate's sf0.01 fixture paths. To replay
 the gate against a Verify run at another scale, pass --sf=sf0.1 (or
 sf0.001): the baked paths are rewritten to that scale's fixtures.
