@@ -693,8 +693,8 @@ object SparkEntry {
 
     // Token-budget shard assignment: contiguous training shards of ~500
     // tokens per language in doc_id order, via the deterministic-bucket
-    // distributed prefix sum (per-bucket subtotals -> driver prefix ->
-    // bounded within-bucket windows) — never a whole-stratum
+    // distributed prefix sum (per-bucket subtotals -> offset window over
+    // the subtotals -> bounded within-bucket windows) — never a whole-stratum
     // single-reducer sort. bucketSize=128 exercises 4 buckets at sf0.01.
     "q_token_shards" -> ((s, dir) => {
       import graft.ops.{Curation, TextOps}

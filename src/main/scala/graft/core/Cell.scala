@@ -28,13 +28,14 @@ final case class Cell(id: Long, face: Int, level: Int,
   def edge(k: Int): Vec3 = edgeRaw(k).normalize
 
   /** Closed containment incl. boundary (cell.go:462-491). */
-  def containsPoint(p: Vec3): Boolean = {
-    STUV.faceXYZToUV(face, p) match {
-      case None => false
-      case Some((u, v)) =>
-        val m = (1.125 + MachineEps) * MachineEps
-        u >= uLo - m && u <= uHi + m && v >= vLo - m && v <= vHi + m
-    }
+  def containsPoint(p: Vec3): Boolean = STUV.onFaceSide(face, p) &&
+    containsUV(STUV.validFaceXYZtoU(face, p.x, p.y, p.z),
+      STUV.validFaceXYZtoV(face, p.x, p.y, p.z))
+
+  /** `containsPoint` for a point on this face's side, given its (u,v). */
+  private[core] def containsUV(u: Double, v: Double): Boolean = {
+    val m = Cell.ContainsPointMargin
+    u >= uLo - m && u <= uHi + m && v >= vLo - m && v <= vHi + m
   }
 
   def center: Vec3 = CellId.toPoint(id)
@@ -264,11 +265,20 @@ final case class Cell(id: Long, face: Int, level: Int,
 }
 
 object Cell {
+  /** Slack of `containsPoint` around the cell's (u,v) rectangle
+    * (cell.go:482-488).
+    */
+  final val ContainsPointMargin: Double =
+    (1.125 + Predicates.MachineEps) * Predicates.MachineEps
+
   def fromId(id: Long): Cell = {
-    val (f, i, j, _) = CellId.faceIJOrientation(id)
+    val p = CellId.ijOrientation(id)
     val lvl = CellId.level(id)
-    val (uLo, uHi, vLo, vHi) = CellId.ijLevelToBoundUV(i, j, lvl)
-    Cell(id, f, lvl, uLo, uHi, vLo, vHi)
+    val size = CellId.sizeIJ(lvl)
+    val iLo = CellId.packedI(p) & -size
+    val jLo = CellId.packedJ(p) & -size
+    Cell(id, CellId.face(id), lvl, CellId.ijToUV(iLo), CellId.ijToUV(iLo + size),
+      CellId.ijToUV(jLo), CellId.ijToUV(jLo + size))
   }
 
   def fromPoint(p: Vec3): Cell = fromId(CellId.fromPoint(p.x, p.y, p.z))

@@ -302,19 +302,23 @@ object CellId {
     * leaf (rangeMin here) and shifting yields the level-k grid index
     * (cellid.go:539-573 decode + the (face,i,j) prefix property).
     */
-  def iAtLevel(id: Long, level: Int): Int = {
-    val (_, i, _, _) = faceIJOrientation(rangeMin(id))
-    i >>> (MaxLevel - level)
-  }
+  def iAtLevel(id: Long, level: Int): Int =
+    packedI(ijOrientation(rangeMin(id))) >>> (MaxLevel - level)
 
-  def jAtLevel(id: Long, level: Int): Int = {
-    val (_, _, j, _) = faceIJOrientation(rangeMin(id))
-    j >>> (MaxLevel - level)
-  }
+  def jAtLevel(id: Long, level: Int): Int =
+    packedJ(ijOrientation(rangeMin(id))) >>> (MaxLevel - level)
 
   def faceIJOrientation(id: Long): (Int, Int, Int, Int) = {
-    val f = face(id)
-    var orientation = f & SwapMask
+    val p = ijOrientation(id)
+    (face(id), packedI(p), packedJ(p), p.toInt & 3)
+  }
+
+  /** Leaf (i, j) and orientation of the cell packed into one Long as
+    * `i << 32 | j << 2 | orientation` (i, j < 2^30), so the hot decode
+    * paths (`Cell.fromId`, `toPoint`) allocate no tuple.
+    */
+  private[core] def ijOrientation(id: Long): Long = {
+    var orientation = face(id) & SwapMask
     var nbits = MaxLevel - 7 * LookupBits // first iteration: 2 bits
     var i = 0
     var j = 0
@@ -330,8 +334,11 @@ object CellId {
       k -= 1
     }
     if ((lsb(id) & 0x1111111111111110L) != 0) orientation ^= SwapMask
-    (f, i, j, orientation)
+    (i.toLong << 32) | (j.toLong << 2) | orientation
   }
+
+  private[core] def packedI(p: Long): Int = (p >>> 32).toInt
+  private[core] def packedJ(p: Long): Int = (p >>> 2).toInt & 0x3FFFFFFF
 
   private def clampIJ(v: Int): Int =
     if (v < -1) -1 else if (v > MaxSize) MaxSize else v
@@ -374,22 +381,19 @@ object CellId {
 
   // ---- decode to point ------------------------------------------------
 
-  /** (face, si, ti) of cell center (cellid.go:525-536). si/ti carried as Long. */
-  def faceSiTi(id: Long): (Int, Long, Long) = {
-    val (f, i, j, _) = faceIJOrientation(id)
-    val delta =
-      if (isLeaf(id)) 1
-      else if (((i ^ (id >>> 2).toInt) & 1) != 0) 2
-      else 0
-    (f, 2L * i + delta, 2L * j + delta)
-  }
+  /** si - 2i (and ti - 2j) of the cell center (cellid.go:525-536). */
+  private def centerDelta(id: Long, i: Int): Int =
+    if (isLeaf(id)) 1
+    else if (((i ^ (id >>> 2).toInt) & 1) != 0) 2
+    else 0
 
   /** Unnormalized center vector (cellid.go:519-522). */
   def rawPoint(id: Long): Vec3 = {
-    val (f, si, ti) = faceSiTi(id)
-    STUV.faceUVToXYZ(f,
-      STUV.stToUV((0.5 / MaxSize) * si.toDouble),
-      STUV.stToUV((0.5 / MaxSize) * ti.toDouble))
+    val p = ijOrientation(id)
+    val delta = centerDelta(id, packedI(p))
+    STUV.faceUVToXYZ(face(id),
+      STUV.stToUV((0.5 / MaxSize) * (2L * packedI(p) + delta).toDouble),
+      STUV.stToUV((0.5 / MaxSize) * (2L * packedJ(p) + delta).toDouble))
   }
 
   def toPoint(id: Long): Vec3 = rawPoint(id).normalize
@@ -532,15 +536,15 @@ object CellId {
     val cellSize = sizeIJ(level)
     val xLo = i & -cellSize
     val yLo = j & -cellSize
-    (STUV.stToUV(STUV.ijToSTMin(xLo)),
-      STUV.stToUV(STUV.ijToSTMin(xLo + cellSize)),
-      STUV.stToUV(STUV.ijToSTMin(yLo)),
-      STUV.stToUV(STUV.ijToSTMin(yLo + cellSize)))
+    (ijToUV(xLo), ijToUV(xLo + cellSize), ijToUV(yLo), ijToUV(yLo + cellSize))
   }
 
+  /** u (or v) of the leaf grid line i. */
+  private[core] def ijToUV(i: Int): Double = STUV.stToUV(STUV.ijToSTMin(i))
+
   def boundUV(id: Long): (Double, Double, Double, Double) = {
-    val (_, i, j, _) = faceIJOrientation(id)
-    ijLevelToBoundUV(i, j, level(id))
+    val p = ijOrientation(id)
+    ijLevelToBoundUV(packedI(p), packedJ(p), level(id))
   }
 
   /** Unsigned ordering comparator for cell ids. */

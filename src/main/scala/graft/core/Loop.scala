@@ -281,15 +281,67 @@ final class Loop private (val vertices: Array[Vec3]) extends S2Region {
       vertex(m + 1), o.vertex(1), reverseOther)
   }
 
-  /** Whether the loop boundary passes through the cell: any loop edge
-    * crosses a cell edge, or a loop vertex lies inside the (closed) cell.
+  // ------------------------------------------------------------------
+  // Loop x Cell relation
+  //
+  // intersects(cell) = rect bounds meet && (boundary touches cell || the
+  //                    cell's vertex 0 is inside)
+  // contains(cell)   = the loop bound holds the cell center && the
+  //                    boundary misses the cell && vertex 0 is inside
+  // where "boundary touches" means a loop vertex lies in the closed cell
+  // or a loop edge crosses a cell edge. `cellRelation` evaluates the
+  // boundary test once for both answers, and on faces with a FaceView it
+  // skips, by (u,v) comparisons, only work whose exact answer is already
+  // known to be "no": a cell outside the padded loop box of a loop whose
+  // interior is the bounded side, and a (cell, edge) pair whose padded
+  // boxes are apart. Every remaining decision uses the same exact
+  // predicates (EdgeCrosser, containsPoint, rect bounds) as the all-edges
+  // scan, so the relation, and with it every covering, is unchanged.
+
+  /** Per-face (u,v) views for the cell tests, built on first use; an entry
+    * is null unless every vertex lies strictly on that face's side.
     */
-  private def boundaryIntersectsCell(cell: Cell): Boolean = {
-    if (isEmptyOrFull) return false
-    // Candidate pruning via the edge index for large loops: only edges
-    // whose leaves overlap the cell's rect bound can touch the cell.
+  @transient private lazy val faceViews: Array[Loop.FaceView] =
+    Array.tabulate(6)(f => Loop.FaceView.build(this, f))
+
+  /** Relation to the cell in one pass (`S2Region.Disjoint`, `Intersects`
+    * or `Contains`). Faces without a view, and loops with an edge index
+    * (whose candidates need the cell's rect bound anyway), take the
+    * all-edges or indexed boundary scan instead of the per-edge prefilter.
+    */
+  override def cellRelation(cell: Cell): Int = {
+    if (isEmpty) return S2Region.Disjoint
+    if (isFull) return if (bound.containsPoint(cell.center) &&
+      containsPoint(cell.vertex(0))) S2Region.Contains else S2Region.Intersects
+    val fv = faceViews(cell.face)
+    if (fv != null && fv.boundedInterior && fv.missesBox(cell)) return S2Region.Disjoint
+    if (fv != null && builtIndex.isEmpty) {
+      val touches = boundaryTouchesOnFace(fv, cell)
+      if (!touches && !containsPoint(cell.vertex(0))) return S2Region.Disjoint
+      if (!bound.intersects(cell.rectBound)) return S2Region.Disjoint
+      relationGivenIntersect(cell, touches)
+    } else {
+      val rect = cell.rectBound
+      if (!bound.intersects(rect)) return S2Region.Disjoint
+      val touches = boundaryTouchesScan(cell, rect)
+      if (!touches && !containsPoint(cell.vertex(0))) return S2Region.Disjoint
+      relationGivenIntersect(cell, touches)
+    }
+  }
+
+  /** Contains or Intersects for a cell known to intersect the loop; when
+    * the boundary misses the cell, its vertex 0 is known to be inside.
+    */
+  private def relationGivenIntersect(cell: Cell, touches: Boolean): Int =
+    if (!touches && bound.containsPoint(cell.center)) S2Region.Contains
+    else S2Region.Intersects
+
+  /** Boundary test over every edge, or the index's candidates for the
+    * cell's rect bound.
+    */
+  private def boundaryTouchesScan(cell: Cell, rect: SphereRect): Boolean = {
     val cand: Array[Int] = builtIndex match {
-      case Some(idx) => idx.candidateEdgesInRect(cell.rectBound)
+      case Some(idx) => idx.candidateEdgesInRect(rect)
       case None => Array.tabulate(vertices.length)(identity)
     }
     var i = 0
@@ -300,29 +352,49 @@ final class Loop private (val vertices: Array[Vec3]) extends S2Region {
     val cv = Array.tabulate(4)(cell.vertex)
     i = 0
     while (i < cand.length) {
-      val e = cand(i)
-      val crosser = new EdgeCrosser(vertex(e), vertex(e + 1))
-      var k = 0
-      while (k < 4) {
-        if (crosser.edgeOrVertexCrossingTo(cv(k), cv((k + 1) & 3))) return true
-        k += 1
+      if (edgeCrossesCell(cand(i), cv)) return true
+      i += 1
+    }
+    false
+  }
+
+  /** Boundary test on a face view: the vertex test reads the view's (u,v)
+    * (the same values `Cell.containsPoint` computes), and only edges whose
+    * padded box meets the cell reach the exact crossing test.
+    */
+  private def boundaryTouchesOnFace(fv: Loop.FaceView, cell: Cell): Boolean = {
+    val n = vertices.length
+    var i = 0
+    while (i < n) {
+      if (cell.containsUV(fv.u(i), fv.v(i))) return true
+      i += 1
+    }
+    var cv: Array[Vec3] = null
+    i = 0
+    while (i < n) {
+      if (fv.edgeMeets(i, cell)) {
+        if (cv == null) cv = Array.tabulate(4)(cell.vertex)
+        if (edgeCrossesCell(i, cv)) return true
       }
       i += 1
     }
     false
   }
 
-  def containsCell(cell: Cell): Boolean = {
-    if (!bound.containsPoint(cell.center)) return false
-    !boundaryIntersectsCell(cell) && containsPoint(cell.vertex(0))
+  /** Whether loop edge e crosses (or shares a vertex with) a cell edge. */
+  private def edgeCrossesCell(e: Int, cv: Array[Vec3]): Boolean = {
+    val crosser = new EdgeCrosser(vertex(e), vertex(e + 1))
+    var k = 0
+    while (k < 4) {
+      if (crosser.edgeOrVertexCrossingTo(cv(k), cv((k + 1) & 3))) return true
+      k += 1
+    }
+    false
   }
 
-  def intersectsCell(cell: Cell): Boolean = {
-    if (isEmpty) return false
-    if (isFull) return true
-    if (!bound.intersects(cell.rectBound)) return false
-    boundaryIntersectsCell(cell) || containsPoint(cell.vertex(0))
-  }
+  def containsCell(cell: Cell): Boolean = cellRelation(cell) == S2Region.Contains
+
+  def intersectsCell(cell: Cell): Boolean = cellRelation(cell) != S2Region.Disjoint
 
   def capBound: Cap = {
     // Bounding cap derived from the rect bound's center/corners.
@@ -453,6 +525,75 @@ object Loop {
       val Array(lat, lng) = tok.split(":").map(_.trim.toDouble)
       (lat, lng)
     }.toSeq)
+
+  /** The loop's vertices in one face's (u,v) coordinates, with padded
+    * per-edge and whole-loop boxes. Built only when every vertex lies
+    * strictly on the face's side: each edge is then a straight segment in
+    * (u,v) (the gnomonic projection maps geodesics to lines), so the
+    * boundary lies inside the loop box and each edge inside its own box.
+    *
+    * `pad` is at least `FaceClipErrorUVCoord + IntersectsRectErrorUVDist`
+    * plus `Cell.ContainsPointMargin`, scaled by the largest |u|, |v|: far
+    * more than the rounding of a vertex's (u,v) (half an ulp) and of a
+    * normalized cell corner (about one ulp), so a box that misses the cell
+    * proves the exact predicates would answer "no".
+    *
+    * `boundedInterior`: the point opposite the face's axis is outside the
+    * loop. It is not on the boundary and every point outside the loop box
+    * is connected to it without crossing the boundary, so such points are
+    * outside too. For a valid loop this is its area being at most 2*Pi.
+    */
+  private[core] final class FaceView(val u: Array[Double], val v: Array[Double],
+                                     eBox: Array[Double], box: Array[Double],
+                                     val boundedInterior: Boolean) {
+    /** Whether the padded box of edge e (u,v lo/hi at 4e..4e+3) meets the cell. */
+    def edgeMeets(e: Int, c: Cell): Boolean = {
+      val b = 4 * e
+      eBox(b) <= c.uHi && eBox(b + 1) >= c.uLo && eBox(b + 2) <= c.vHi && eBox(b + 3) >= c.vLo
+    }
+
+    def missesBox(c: Cell): Boolean =
+      box(0) > c.uHi || box(1) < c.uLo || box(2) > c.vHi || box(3) < c.vLo
+  }
+
+  private[core] object FaceView {
+    final val PadUV: Double = EdgeClipping.FaceClipErrorUVCoord +
+      EdgeClipping.IntersectsRectErrorUVDist + Cell.ContainsPointMargin
+
+    def build(loop: Loop, face: Int): FaceView = {
+      val n = loop.numVertices
+      val u = new Array[Double](n)
+      val v = new Array[Double](n)
+      var scale = 1.0
+      var i = 0
+      while (i < n) {
+        val p = loop.vertices(i)
+        if (!STUV.onFaceSide(face, p)) return null
+        u(i) = STUV.validFaceXYZtoU(face, p.x, p.y, p.z)
+        v(i) = STUV.validFaceXYZtoV(face, p.x, p.y, p.z)
+        scale = math.max(scale, math.max(math.abs(u(i)), math.abs(v(i))))
+        i += 1
+      }
+      val pad = PadUV * scale
+      val eBox = new Array[Double](4 * n)
+      val box = Array(Double.MaxValue, -Double.MaxValue, Double.MaxValue, -Double.MaxValue)
+      i = 0
+      while (i < n) {
+        val j = if (i + 1 == n) 0 else i + 1
+        eBox(4 * i) = math.min(u(i), u(j)) - pad
+        eBox(4 * i + 1) = math.max(u(i), u(j)) + pad
+        eBox(4 * i + 2) = math.min(v(i), v(j)) - pad
+        eBox(4 * i + 3) = math.max(v(i), v(j)) + pad
+        box(0) = math.min(box(0), eBox(4 * i))
+        box(1) = math.max(box(1), eBox(4 * i + 1))
+        box(2) = math.min(box(2), eBox(4 * i + 2))
+        box(3) = math.max(box(3), eBox(4 * i + 3))
+        i += 1
+      }
+      new FaceView(u, v, eBox, box,
+        !loop.bruteForceContainsPoint(STUV.unitNorm(face) * -1.0))
+    }
+  }
 
   val empty: Loop = new Loop(Array(Vec3(0, 0, 1)))
   val full: Loop = new Loop(Array(Vec3(0, 0, -1)))

@@ -177,18 +177,30 @@ final class Polygon(val loops: Array[Loop]) extends S2Region {
 
   def rectBound: SphereRect = bound
 
-  def containsCell(cell: Cell): Boolean = {
-    if (!bound.containsPoint(cell.center)) return false
-    // The polygon contains the cell iff no loop boundary passes through it
-    // (each loop either wholly contains the cell or is disjoint from it)
-    // and one cell corner is inside the polygon.
-    loops.forall(l => l.containsCell(cell) || !l.intersectsCell(cell)) &&
-      containsPoint(cell.vertex(0))
+  /** Composed from one relation per loop. The polygon intersects the cell
+    * iff some loop does or a cell corner is inside it. It contains the cell
+    * iff the bound holds the cell center, no loop boundary passes through
+    * the cell (each loop contains it or is disjoint from it) and one cell
+    * corner is inside the polygon.
+    */
+  override def cellRelation(cell: Cell): Int = {
+    var someLoopContains = false
+    var i = 0
+    while (i < loops.length) {
+      val r = loops(i).cellRelation(cell)
+      if (r == S2Region.Intersects) return S2Region.Intersects
+      if (r == S2Region.Contains) someLoopContains = true
+      i += 1
+    }
+    val cornerInside = containsPoint(cell.vertex(0))
+    if (!someLoopContains && !cornerInside) S2Region.Disjoint
+    else if (cornerInside && bound.containsPoint(cell.center)) S2Region.Contains
+    else S2Region.Intersects
   }
 
-  def intersectsCell(cell: Cell): Boolean = {
-    loops.exists(_.intersectsCell(cell)) || containsPoint(cell.vertex(0))
-  }
+  def containsCell(cell: Cell): Boolean = cellRelation(cell) == S2Region.Contains
+
+  def intersectsCell(cell: Cell): Boolean = cellRelation(cell) != S2Region.Disjoint
 
   def cellUnionBound: Array[Long] = capBound.cellUnionBound
 }

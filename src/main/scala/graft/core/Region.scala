@@ -11,6 +11,24 @@ trait S2Region extends Serializable {
   def containsPoint(p: Vec3): Boolean
   /** Small cell covering seed, <= 6 cells (region.go:52-58). */
   def cellUnionBound: Array[Long]
+
+  /** Both cell predicates in one call: `S2Region.Disjoint` when the
+    * region does not intersect the cell, `Contains` when it intersects and
+    * contains it, `Intersects` otherwise. The RegionCoverer asks only this.
+    * The default is built from `intersectsCell` and `containsCell`; regions
+    * that can share work between the two (Loop, Polygon) override it and
+    * must return exactly what the default would.
+    */
+  def cellRelation(cell: Cell): Int =
+    if (!intersectsCell(cell)) S2Region.Disjoint
+    else if (containsCell(cell)) S2Region.Contains
+    else S2Region.Intersects
+}
+
+object S2Region {
+  final val Disjoint = 0
+  final val Intersects = 1
+  final val Contains = 2
 }
 
 /** ChordAngle helpers: squared chord length in [0,4] as plain Double

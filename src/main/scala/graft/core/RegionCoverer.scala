@@ -10,6 +10,15 @@ import scala.collection.mutable.ArrayBuffer
   * formula (regioncoverer.go:226) and the binary-heap pop order are ported
   * exactly (including Go container/heap's sift semantics) so covering
   * contents reproduce run-to-run and across parallelism levels.
+  *
+  * Each cell the search visits costs one `S2Region.cellRelation` call,
+  * which answers the reference's separate IntersectsCell and ContainsCell
+  * questions together. Loop and Polygon fuse the two: the loop boundary
+  * is tested against the cell once, and on faces that hold every vertex a
+  * per-face (u,v) view skips cells and (cell, edge) pairs only where padded
+  * boxes prove the exact predicates would answer "no"; other faces and
+  * indexed loops fall back to the all-edges or indexed scan. The relation
+  * equals the two predicates cell for cell, so coverings are unchanged.
   */
 final case class RegionCoverer(minLevel: Int = 0, maxLevel: Int = CellId.MaxLevel,
                                levelMod: Int = 1, maxCells: Int = 8) {
@@ -148,15 +157,20 @@ private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
   val result = new ArrayBuffer[Long]()
   private val pq = new CandidateHeap
 
+  /** One `cellRelation` call per cell: the relation answers both the
+    * intersects and the contains question the reference asks separately.
+    */
   private def newCandidate(cell: Cell): Candidate = {
-    if (!region.intersectsCell(cell)) return null
+    val rel = region.cellRelation(cell)
+    if (rel == S2Region.Disjoint) return null
+    val contains = rel == S2Region.Contains
     val cand = new Candidate(cell)
     val level = cell.level
     if (level >= minLevel) {
       if (interiorCovering) {
-        if (region.containsCell(cell)) cand.terminal = true
+        if (contains) cand.terminal = true
         else if (level + levelMod > maxLevel) return null
-      } else if (level + levelMod > maxLevel || region.containsCell(cell)) {
+      } else if (level + levelMod > maxLevel || contains) {
         cand.terminal = true
       }
     }
@@ -171,7 +185,7 @@ private final class Coverer(minLevel: Int, maxLevel: Int, levelMod: Int,
     while (ci != last) {
       val childCell = Cell.fromId(ci)
       if (numLevels > 0) {
-        if (region.intersectsCell(childCell))
+        if (region.cellRelation(childCell) != S2Region.Disjoint)
           numTerminals += expandChildren(cand, childCell, numLevels)
       } else {
         val child = newCandidate(childCell)

@@ -80,44 +80,38 @@ object Curation {
     * DETERMINISTIC coarse bucket (floor(order / bucketSize), no sampled
     * range boundaries, so the result is identical at any parallelism):
     *   1. per-(stratum, bucket) subtotals — a map-side-combinable
-    *      aggregate, collected to the driver (bounded by
-    *      order-domain / bucketSize rows);
-    *   2. driver prefix over buckets in order → per-bucket start offsets,
-    *      broadcast back;
+    *      aggregate, bounded by order-domain / bucketSize rows;
+    *   2. each bucket's start offset = the running sum of the earlier
+    *      buckets' subtotals in its stratum, a window over that small
+    *      subtotal table, broadcast back;
     *   3. a within-bucket cumulative window, partitioned by
     *      (stratum, bucket) — every window partition is ≤ bucketSize
     *      rows, embarrassingly parallel.
-    * One shuffle (the window), bounded window state, bounded driver pull.
+    * No row is dropped: the offsets join back null-safely, so a NULL
+    * stratum or order value is its own group, and a subtotal whose costs
+    * are all NULL counts as 0 (such rows get a NULL shard, as in the
+    * single-window form).
     */
   def tokenShards(df: DataFrame, stratum: String, orderCol: String,
                   costCol: String, budget: Long,
                   bucketSize: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
     val bucketed = df.withColumn("_bkt",
       floor(col(orderCol) / lit(bucketSize)).cast("long"))
-    val subs = bucketed.groupBy(col(stratum).as("_s"), col("_bkt"))
-      .agg(sum(col(costCol)).cast("long").as("_sub"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    // Driver prefix: offset(s, b) = Σ subtotals of (s, b') for b' < b.
-    val offsets = subs.sortBy(r => (r._1, r._2)).foldLeft(
-      (List.empty[(String, Long, Long)], "", 0L)) {
-      case ((acc, prevS, run), (s, b, sub)) =>
-        val start = if (s == prevS) run else 0L
-        ((s, b, start) :: acc, s, start + sub)
-    }._1
-    import spark.implicits._
-    val offDf = offsets.toDF("_s", "_bkt", "_off")
-      .withColumnRenamed("_s", stratum)
+    val earlier = Window.partitionBy(col("_s")).orderBy(col("_b"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = bucketed.groupBy(col(stratum).as("_s"), col("_bkt").as("_b"))
+      .agg(coalesce(sum(col(costCol)).cast("long"), lit(0L)).as("_sub"))
+      .withColumn("_off", coalesce(sum(col("_sub")).over(earlier), lit(0L)))
+      .drop("_sub")
     val w = Window.partitionBy(col(stratum), col("_bkt"))
       .orderBy(col(orderCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bucketed.join(broadcast(offDf), Seq(stratum, "_bkt"))
+    bucketed.join(broadcast(offsets),
+      bucketed(stratum) <=> offsets("_s") && bucketed("_bkt") <=> offsets("_b"))
       .withColumn("_cum", sum(col(costCol)).over(w) + col("_off"))
       .withColumn("shard",
         floor((col("_cum") - col(costCol)) / lit(budget)).cast("long"))
-      .drop("_bkt", "_off", "_cum")
+      .drop("_bkt", "_s", "_b", "_off", "_cum")
   }
 
   /** CCNet-style quality-bucket assignment (head/middle/tail per

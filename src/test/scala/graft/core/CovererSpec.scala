@@ -116,6 +116,40 @@ class CovererSpec extends AnyFunSuite {
     assert(a.ids sameElements b.ids)
   }
 
+  /** SHA-256 over every region's covering then interior covering, each
+    * prefixed by its cell count.
+    */
+  private def coveringDigest(rc: RegionCoverer, regions: Seq[S2Region]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    def put(v: Long): Unit = { buf.clear(); buf.putLong(v); md.update(buf.array()) }
+    for (r <- regions; cu <- Seq(rc.covering(r), rc.interiorCovering(r))) {
+      put(cu.size.toLong)
+      cu.ids.foreach(put)
+    }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  // Digests taken from the coverer before the fused cell relation: the
+  // relation must reproduce every covering bit for bit.
+  test("coverings are pinned: tenKPolys, cities, coast and a polygon with a hole") {
+    val tenK = graft.SparkEntry.tenKPolys.map(_._2)
+    val bigs = graft.SparkEntry.cityPolygons.map(_._2) :+ graft.SparkEntry.coastLoop
+    val c = LatLng.toPointDegrees(51.5, -0.12)
+    val holed = Polygon.fromLoops(Seq(
+      Loop.regularLoop(c, Earth.angleFromMeters(20000), 16),
+      Loop.regularLoop(LatLng.toPointDegrees(51.52, -0.1), Earth.angleFromMeters(6000), 7)))
+    assert(holed.loops(1).isHole)
+    val got = Seq(
+      coveringDigest(RegionCoverer(maxCells = 8), tenK),
+      coveringDigest(RegionCoverer(maxCells = 32), bigs),
+      coveringDigest(RegionCoverer(maxCells = 8), Seq(holed)))
+    assert(got === Seq(
+      "17ac79d26abfd0b3d91793a0c15a976f3ca0adcde2d11abb3e3d5c606e7064bb",
+      "97d880d3c30cca82a14fc8bbacc4dc1dae434279daa31ccaecd571c7a66d678b",
+      "98c1f4b8efd1ec6ecc49d7f4f41ad91f1d3dc797e5d705ab2c4da12eae3a7e4c"))
+  }
+
   test("cell union normalize: siblings collapse (cellunion_test.go semantics)") {
     val id = CellId.parent(CellId.fromLatLngDegrees(10, 20), 10)
     val kids = CellId.children(id)

@@ -192,6 +192,33 @@ class CurationSpec extends AnyFunSuite {
       4L -> 0L, 5L -> 0L, 6L -> 1L))
   }
 
+  test("tokenShards keeps NULL-stratum rows and all-NULL-cost buckets") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val rows = Seq[(Long, Option[String], Option[Long])](
+      (0L, None, Some(60L)), (1L, None, Some(60L)), (2L, None, Some(60L)),
+      (3L, None, Some(10L)), (4L, Some("en"), Some(70L)), (5L, Some("en"), Some(70L)),
+      (6L, Some("de"), None), (7L, Some("de"), None), (8L, Some("de"), Some(30L)))
+    val df = rows.toDF("id", "lang", "cost")
+    def shards(d: org.apache.spark.sql.DataFrame): Map[Long, Option[Long]] =
+      d.select("id", "shard").collect()
+        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    val w = Window.partitionBy("lang").orderBy("id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val want = shards(df.withColumn("shard",
+      floor((sum(col("cost")).over(w) - col("cost")) / lit(100L)).cast("long")))
+    // NULL lang: costs-before 0,60,120,180; de: NULL costs get a NULL shard
+    assert(want == Map(0L -> Some(0L), 1L -> Some(0L), 2L -> Some(1L), 3L -> Some(1L),
+      4L -> Some(0L), 5L -> Some(0L), 6L -> None, 7L -> None, 8L -> Some(0L)))
+    // bucketSize 2 gives the NULL stratum two subtotal rows and de an
+    // all-NULL-cost bucket; 10^6 gives the NULL stratum exactly one
+    for (bkt <- Seq(2L, 1000000L)) {
+      val got = Curation.tokenShards(df, "lang", "id", "cost", budget = 100L, bucketSize = bkt)
+      assert(got.count() === rows.size, s"bucketSize=$bkt")
+      assert(shards(got) == want, s"bucketSize=$bkt")
+    }
+  }
+
   test("sampleDeterministic: partitioning-invariant, rate-gated, nested across rates") {
     import spark.implicits._
     val docs = Seq.tabulate(400)(i => (i.toLong, if (i % 3 == 0) "en" else "de"))
